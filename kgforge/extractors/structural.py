@@ -1,35 +1,24 @@
-"""Structural extractors (SURVEY.md §2.3) as Catalyst expressions.
+"""Extractors that run outside the fused pass, as per-extractor DataFrames.
 
-Reference parity notes cite file:line under /root/reference/core/src/main/
-scala/org/dbpedia/extraction/. All quads carry ``context = null`` (Quad
+The structural extractor families are defined once, in ``fused.py``
+(``run_extractors`` / ``fused_quads``). What stays here has no fused twin
+(long abstracts, IRI/URI sameAs, fr population) or is the full i18n form of a
+family whose shipped definition is the simpler fused segment (homepages,
+disambiguations with the page_props source, gender, topical concepts). The
+i18n forms are not on the shipped path: making the fused segments agree with
+them would change the shipped graph.
+
+Reference parity notes cite file:line under the reference's
+core/src/main/scala/org/dbpedia/extraction/. All quads carry ``context = null`` (Quad
 equality ignores context, transform/Quad.scala:120-157).
 """
 
 from __future__ import annotations
 
-import functools
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import vocab as V
-from ..namespaces import (
-    CATEGORY,
-    FILE,
-    MAIN,
-    RDF_LANGSTRING,
-    RDF_TYPE,
-    RDFS_LABEL,
-    TEMPLATE,
-    XSD_INTEGER,
-    XSD_NONNEG_INT,
-    XSD_STRING,
-    normalize_title,
-    resource_base,
-    title_with_namespace,
-    wiki_base,
-    wiki_encode,
-)
+from ..namespaces import CATEGORY, MAIN, RDF_LANGSTRING, TEMPLATE
 
 # All IRIs are minted at parse time inside the single mapInPandas stage
 # (kgforge/parse.py) — extractors are 100% JVM-side Catalyst expressions.
@@ -56,13 +45,6 @@ def _quads(
     ).filter(F.col("subject").isNotNull() & F.col("value").isNotNull())
 
 
-def _prop_base() -> Column:
-    """Per-language property namespace (Language.propertyUri)."""
-    return F.when(F.col("lang") == "en", F.lit("http://dbpedia.org/property/")).otherwise(
-        F.concat(F.lit("http://"), F.col("lang"), F.lit(".dbpedia.org/property/"))
-    )
-
-
 def _main(df: DataFrame) -> DataFrame:
     return df.filter(F.col("namespace") == MAIN)
 
@@ -74,174 +56,6 @@ def _is_redirect() -> Column:
 def _internal_links() -> Column:
     # internal links = iw == '' (InterWikiLinkNode vs InternalLinkNode)
     return F.filter(F.col("links"), lambda l: l["iw"] == "")
-
-
-# ---------------------------------------------------------------------------
-# extractors
-# ---------------------------------------------------------------------------
-
-
-def extract_labels(parsed: DataFrame) -> DataFrame:
-    """LabelExtractor (mappings/LabelExtractor.scala:27-37): Main-ns title as
-    rdfs:label langString."""
-    return _quads(_main(parsed), V.LABELS, F.col("subject"), RDFS_LABEL, F.col("title"), langstring=True)
-
-
-def extract_page_ids(parsed: DataFrame) -> DataFrame:
-    """PageIdExtractor (mappings/PageIdExtractor.scala:23-29): all namespaces."""
-    return _quads(parsed, V.PAGE_IDS, F.col("subject"), V.WIKI_PAGE_ID, F.col("page_id"), XSD_INTEGER)
-
-
-def extract_revision_ids(parsed: DataFrame) -> DataFrame:
-    """RevisionIdExtractor (mappings/RevisionIdExtractor.scala:23-29)."""
-    return _quads(
-        parsed, V.REVISION_IDS, F.col("subject"), V.WIKI_PAGE_REVISION_ID, F.col("revision_id"), XSD_INTEGER
-    )
-
-
-def extract_page_length(parsed: DataFrame) -> DataFrame:
-    """WikiPageLengthExtractor (mappings/WikiPageLengthExtractor.scala:22-32)."""
-    return _quads(
-        _main(parsed),
-        V.PAGE_LENGTH,
-        F.col("subject"),
-        V.WIKI_PAGE_LENGTH,
-        F.length("content"),
-        XSD_NONNEG_INT,
-    )
-
-
-def extract_out_degree(parsed: DataFrame) -> DataFrame:
-    """WikiPageOutDegreeExtractor (:25-37): count of internal-link nodes."""
-    return _quads(
-        _main(parsed),
-        V.OUT_DEGREE,
-        F.col("subject"),
-        V.WIKI_PAGE_OUT_DEGREE,
-        F.size(_internal_links()),
-        XSD_NONNEG_INT,
-    )
-
-
-def _exploded_internal_links(parsed: DataFrame) -> DataFrame:
-    return _main(parsed).select(
-        "lang", "subject", F.explode(_internal_links()).alias("link")
-    )
-
-
-def extract_page_links(parsed: DataFrame) -> DataFrame:
-    """PageLinksExtractor (:27-41): every internal link on a Main page,
-    any destination namespace."""
-    ex = _exploded_internal_links(parsed)
-    return _quads(ex, V.PAGE_LINKS, F.col("subject"), V.WIKI_PAGE_WIKI_LINK, F.col("link.iri"))
-
-
-def extract_anchor_text(parsed: DataFrame) -> DataFrame:
-    """AnchorTextExtractor (:24-48): subject = link TARGET, value = anchor
-    text — the surface-form generator feeding entity linking."""
-    ex = _exploded_internal_links(parsed).filter(F.col("link.ns") == MAIN)
-    return _quads(
-        ex, V.ANCHOR_TEXT, F.col("link.iri"), V.WIKI_PAGE_WIKI_LINK_TEXT, F.col("link.label"), langstring=True
-    )
-
-
-def extract_external_links(parsed: DataFrame) -> DataFrame:
-    """ExternalLinksExtractor (:24-37)."""
-    ex = _main(parsed).select("lang", "subject", F.explode("external_links").alias("e"))
-    return _quads(ex, V.EXTERNAL_LINKS, F.col("subject"), V.WIKI_PAGE_EXTERNAL_LINK, F.col("e.uri"))
-
-
-def extract_article_categories(parsed: DataFrame) -> DataFrame:
-    """ArticleCategoriesExtractor (:16-29): Main-page links into Category ns."""
-    ex = _exploded_internal_links(parsed).filter(F.col("link.ns") == CATEGORY)
-    return _quads(ex, V.ARTICLE_CATEGORIES, F.col("subject"), V.DCT_SUBJECT, F.col("link.iri"))
-
-
-def extract_category_labels(parsed: DataFrame) -> DataFrame:
-    """CategoryLabelExtractor (:17-25)."""
-    cats = parsed.filter(F.col("namespace") == CATEGORY)
-    return _quads(cats, V.CATEGORY_LABELS, F.col("subject"), RDFS_LABEL, F.col("title"), langstring=True)
-
-
-def extract_skos_categories(parsed: DataFrame) -> DataFrame:
-    """SkosCategoriesExtractor (:24-41): Concept type + prefLabel + broader
-    per category-destination link on Category pages."""
-    cats = parsed.filter(F.col("namespace") == CATEGORY)
-    types = _quads(cats, V.SKOS_CATEGORIES, F.col("subject"), RDF_TYPE, F.lit(V.SKOS_CONCEPT))
-    labels = _quads(cats, V.SKOS_CATEGORIES, F.col("subject"), V.SKOS_PREF_LABEL, F.col("title"), langstring=True)
-    broader_links = cats.select(
-        "lang", "subject", F.explode(F.filter(F.col("links"), lambda l: (l["iw"] == "") & (l["ns"] == CATEGORY))).alias("link")
-    )
-    broader = _quads(
-        broader_links, V.SKOS_CATEGORIES, F.col("subject"), V.SKOS_BROADER, F.col("link.iri")
-    )
-    return types.unionByName(labels).unionByName(broader)
-
-
-def extract_article_page(parsed: DataFrame) -> DataFrame:
-    """ArticlePageExtractor (:23-41): foaf:isPrimaryTopicOf / primaryTopic /
-    dc:language / rdf:type foaf:Document."""
-    pages = _main(parsed).select("lang", "subject", "page_iri")
-    a = _quads(pages, V.WIKIPEDIA_LINKS, F.col("subject"), V.FOAF_IS_PRIMARY_TOPIC_OF, F.col("page_iri"))
-    b = _quads(pages, V.WIKIPEDIA_LINKS, F.col("page_iri"), V.FOAF_PRIMARY_TOPIC, F.col("subject"))
-    c = _quads(pages, V.WIKIPEDIA_LINKS, F.col("page_iri"), V.DC_LANGUAGE, F.col("lang"), XSD_STRING)
-    d = _quads(pages, V.WIKIPEDIA_LINKS, F.col("page_iri"), RDF_TYPE, F.lit(V.FOAF_DOCUMENT))
-    return a.unionByName(b).unionByName(c).unionByName(d)
-
-
-def extract_article_templates(parsed: DataFrame) -> DataFrame:
-    """ArticleTemplatesExtractor (:31-65): top-level templates →
-    article_templates, nested → article_templates_nested; predicate in the
-    per-language PROPERTY namespace (see the FIXME at :25-27)."""
-    pred = F.concat(_prop_base(), F.lit("wikiPageUsesTemplate"))
-    ex = parsed.select("lang", "subject", F.explode("templates").alias("t"))
-    tpl_iri = F.col("t.iri")
-    top = _quads(ex.filter(F.col("t.depth") == 0), V.ARTICLE_TEMPLATES, F.col("subject"), pred, tpl_iri)
-    nested = _quads(
-        ex.filter(F.col("t.depth") > 0), V.ARTICLE_TEMPLATES_NESTED, F.col("subject"), pred, tpl_iri
-    )
-    return top.unionByName(nested)
-
-
-def extract_template_parameters(parsed: DataFrame) -> DataFrame:
-    """TemplateParameterExtractor (:26-55): declared {{{params}}} on
-    non-redirect Template-ns pages, distinct per page, xsd:string."""
-    tpl = parsed.filter((F.col("namespace") == TEMPLATE) & ~_is_redirect())
-    ex = tpl.select("lang", "subject", F.explode(F.array_distinct("param_decls")).alias("param")).filter(
-        F.col("param") != ""
-    )
-    pred = F.concat(_prop_base(), F.lit("templateUsesParameter"))
-    return _quads(ex, V.TEMPLATE_PARAMETERS, F.col("subject"), pred, F.col("param"), XSD_STRING)
-
-
-def extract_redirects(parsed: DataFrame) -> DataFrame:
-    """RedirectExtractor (:27-38): redirect pages in {Main, Template,
-    Category} whose target is in the SAME namespace."""
-    red = parsed.filter(_is_redirect() & (F.size("links") > 0))
-    first = F.element_at("links", 1)
-    red = red.select("lang", "namespace", "subject", first.alias("link")).filter(
-        (F.col("link.iw") == "") & (F.col("link.ns") == F.col("namespace"))
-    )
-    return _quads(red, V.REDIRECTS, F.col("subject"), V.WIKI_PAGE_REDIRECTS, F.col("link.iri"))
-
-
-def extract_interlanguage_links(parsed: DataFrame) -> DataFrame:
-    """InterLanguageLinksExtractor (:17-26): InterWikiLinkNodes on
-    Main/Template/Category pages."""
-    df = parsed.filter(F.col("namespace").isin(MAIN, TEMPLATE, CATEGORY))
-    ex = df.select(
-        "lang", "subject", F.explode(F.filter(F.col("links"), lambda l: l["iw"] != "")).alias("link")
-    )
-    return _quads(
-        ex, V.INTERLANGUAGE_LINKS, F.col("subject"), V.WIKI_PAGE_INTER_LANGUAGE_LINK, F.col("link.iri")
-    )
-
-
-def extract_abstracts(parsed: DataFrame) -> DataFrame:
-    """Deterministic first-paragraph abstract (substitute for the reference's
-    live-API PlainAbstractExtractor — SURVEY.md §2.3 abstracts group)."""
-    df = _main(parsed).filter(~_is_redirect() & (F.col("abstract") != ""))
-    return _quads(df, V.ABSTRACTS, F.col("subject"), V.ABSTRACT_PROP, F.col("abstract"), langstring=True)
 
 
 _DISAMBIG_TEMPLATES = ("disambiguation", "disambig", "dab", "begriffsklärung", "homonymie")
@@ -316,7 +130,8 @@ def extract_disambiguations(parsed: DataFrame, page_props_ids: DataFrame | None 
     primary source, Disambiguations.scala:60-113 — OR it carries a
     disambiguation template (the load-failure fallback, :70-77). The id set
     is bounded by the number of disambiguation pages (~0.3% of enwiki), so
-    the semi-join broadcasts even at dump scale."""
+    the semi-join broadcasts even at dump scale.
+    Not on the shipped path: the shipped family is the fused segment."""
     is_disambig = F.exists(
         F.col("templates"), lambda t: F.lower(t["name"]).isin(*_DISAMBIG_TEMPLATES)
     )
@@ -438,7 +253,8 @@ def extract_homepages(parsed: DataFrame) -> DataFrame:
     section, (3) an external link whose label matches the language's
     'official' keyword inside that section. All three branches are Catalyst
     expressions over the parse columns; 'inside the section' = line number
-    within [section line, next section line)."""
+    within [section line, next section line).
+    Not on the shipped path: the shipped family is the fused segment."""
     main = _main(parsed)
 
     # branch 1: infobox property
@@ -544,93 +360,6 @@ def extract_homepages(parsed: DataFrame) -> DataFrame:
     return _quads(first, V.HOMEPAGES, F.col("subject"), V.FOAF_HOMEPAGE, F.col("url"))
 
 
-# --- geo ---------------------------------------------------------------
-
-
-def extract_geo(parsed: DataFrame) -> DataFrame:
-    """GeoExtractor (:26-58): first ROOT template parseable as a coordinate →
-    4 quads. The coordinate itself is computed at parse time
-    (wikitext.ParsedPage.first_coord) so this is a pure projection."""
-    first = _main(parsed).filter(F.col("coord_lat").isNotNull()).select(
-        "lang", "subject", "coord_lat", "coord_lon"
-    )
-    lat_s = F.col("coord_lat").cast("string")  # double repr == vocab.fmt_double
-    lon_s = F.col("coord_lon").cast("string")
-    xsd_float = "http://www.w3.org/2001/XMLSchema#float"
-    a = _quads(first, V.GEO_COORDINATES, F.col("subject"), RDF_TYPE, F.lit(V.GEO_SPATIAL_THING))
-    b = _quads(first, V.GEO_COORDINATES, F.col("subject"), V.GEO_LAT, lat_s, xsd_float)
-    c = _quads(first, V.GEO_COORDINATES, F.col("subject"), V.GEO_LONG, lon_s, xsd_float)
-    d = _quads(
-        first, V.GEO_COORDINATES, F.col("subject"), V.GEORSS_POINT, F.concat_ws(" ", lat_s, lon_s), XSD_STRING
-    )
-    return a.unionByName(b).unionByName(c).unionByName(d)
-
-
-# --- infobox -----------------------------------------------------------
-
-_IGNORE_TEMPLATES = (
-    "redirect", "seealso", "see_also", "main", "cquote", "chess diagram", "ipa", "lang",
-    "تحويل",  # ar redirect (InfoboxExtractorConfig.ignoreTemplates)
-)
-_IGNORE_TEMPLATE_RE = r"^(cite.*|citation.*|assessment.*|zh-.*|llang.*|ipa-.*|citajxo.*)$"
-# InfoboxExtractorConfig.ignoreProperties: per-language image/map parameter
-# names, en as the fallback set (InfoboxExtractor.scala:121 getOrElse("en");
-# keys compare lowercased, so el's capitalized duplicates collapse)
-_IGNORE_PROPS_BY_LANG: dict[str, tuple[str, ...]] = {
-    "en": ("image", "image_photo", "map"),
-    "am": ("ምስል", "ፎቶ", "ስዕል", "ካርታ", "አርማ"),
-    "ar": ("صورة",),
-    "id": ("foto", "gambar"),
-    "el": ("εικόνα", "εικονα", "χάρτης"),
-    "eo": ("dosiero",),
-    "pt": ("imagem", "foto", "mapa"),
-}
-_IGNORE_PROPS = _IGNORE_PROPS_BY_LANG["en"]
-
-
-def extract_infobox(parsed: DataFrame) -> DataFrame:
-    """InfoboxExtractor (mappings/InfoboxExtractor.scala:108-197): raw
-    template harvest with quality gates + typing cascade; delegates to the
-    same array-in/array-out UDF as the fused path so split/parens semantics
-    stay identical."""
-    from .fused import infobox_props_udf
-
-    ib_col = (
-        F.col("_ib")
-        if "_ib" in parsed.columns
-        else infobox_props_udf(F.col("lang"), F.col("templates"))
-    )
-    typed = (
-        _main(parsed)
-        .select("lang", "subject", F.explode(ib_col).alias("r"))
-    )
-    props = typed.select(
-        F.col("lang").alias("language"),
-        F.lit(V.INFOBOX_PROPERTIES).alias("dataset"),
-        F.col("subject"),
-        F.col("r.prop_iri").alias("predicate"),
-        F.col("r.value").alias("value"),
-        F.lit(None).cast("string").alias("context"),
-        F.col("r.datatype").alias("datatype"),
-    )
-    defs_src = typed.select(
-        "lang", F.col("r.prop_iri").alias("prop_iri"), F.col("r.prop_label").alias("lbl")
-    ).distinct()
-    d1 = _quads(defs_src, V.INFOBOX_PROPERTY_DEFINITIONS, F.col("prop_iri"), RDF_TYPE, F.lit(V.RDF_PROPERTY))
-    d2 = _quads(defs_src, V.INFOBOX_PROPERTY_DEFINITIONS, F.col("prop_iri"), RDFS_LABEL, F.col("lbl"), None)
-    d2 = d2.withColumn("datatype", F.lit(RDF_LANGSTRING))
-    return props.unionByName(d1).unionByName(d2)
-
-
-def extract_provenance(parsed: DataFrame) -> DataFrame:
-    """ProvenanceExtractor (mappings/ProvenanceExtractor.scala:25-29):
-    prov:wasDerivedFrom sourceIri (WikiPage.scala:62)."""
-    src = F.concat(
-        F.col("page_iri"), F.lit("?oldid="), F.col("revision_id"), F.lit("&ns="), F.col("namespace")
-    )
-    return _quads(parsed, V.PROVENANCE, F.col("subject"), V.PROV_WAS_DERIVED_FROM, src)
-
-
 def _pronoun_count(pronoun: str):
     # regexp_count keeps the reference's exact non-overlapping-match
     # semantics (GenderExtractor.scala:58 findAllIn) without materializing a
@@ -664,7 +393,8 @@ def _person_template_names():
 def extract_gender(parsed: DataFrame) -> DataFrame:
     """GenderExtractor (mappings/GenderExtractor.scala:39-86): argmax of
     gendered pronoun counts over the raw wikitext; emit when
-    count > 3 and count/second > 2 (GenderExtractorConfig.scala:31-33)."""
+    count > 3 and count/second > 2 (GenderExtractorConfig.scala:31-33).
+    Not on the shipped path: the shipped family is the fused segment."""
     en_m, en_f, _, _ = _GENDER_TABLES["en"]
     male = sum((_pronoun_count(p) for p in en_m), F.lit(0))
     female = sum((_pronoun_count(p) for p in en_f), F.lit(0))
@@ -701,7 +431,8 @@ def extract_topical_concepts(parsed: DataFrame) -> DataFrame:
     37-62): Category pages carrying a {{Cat main|Article}}-family template →
     mainArticleForCategory to the named article (first positional param).
     The blank-sort-label link path ([[Main article| ]]) rides along as a
-    documented extension — the golden corpus marks main articles that way."""
+    documented extension — the golden corpus marks main articles that way.
+    Not on the shipped path: the shipped family is the fused segment."""
     from ..wikidata import wiki_encode_expr
 
     cats = parsed.filter(F.col("namespace") == CATEGORY)
@@ -752,257 +483,6 @@ def extract_uri_same_as_iri(parsed: DataFrame) -> DataFrame:
         "uri", iri_to_uri_udf(F.col("subject"))
     ).filter(F.col("uri") != F.col("subject"))
     return _quads(pages, "uri_same_as_iri", F.col("subject"), V.OWL_SAME_AS, F.col("uri"))
-
-
-# ---------------------------------------------------------------------------
-
-ALL_EXTRACTORS = {
-    "labels": extract_labels,
-    "page_ids": extract_page_ids,
-    "revision_ids": extract_revision_ids,
-    "page_length": extract_page_length,
-    "out_degree": extract_out_degree,
-    "page_links": extract_page_links,
-    "anchor_text": extract_anchor_text,
-    "external_links": extract_external_links,
-    "article_categories": extract_article_categories,
-    "category_labels": extract_category_labels,
-    "skos_categories": extract_skos_categories,
-    "article_page": extract_article_page,
-    "article_templates": extract_article_templates,
-    "template_parameters": extract_template_parameters,
-    "redirects": extract_redirects,
-    "interlanguage_links": extract_interlanguage_links,
-    "abstracts": extract_abstracts,
-    "disambiguations": extract_disambiguations,
-    "homepages": extract_homepages,
-    "geo": extract_geo,
-    "infobox": extract_infobox,
-    "provenance": extract_provenance,
-    "gender": extract_gender,
-    "topical_concepts": extract_topical_concepts,
-}
-
-
-def run_extractors(parsed: DataFrame, names: list[str] | None = None) -> DataFrame:
-    """CompositeParseExtractor analog: one parsed DataFrame fanned out to all
-    extractors, results unioned. Caller is responsible for persisting/
-    checkpointing `parsed` so the parse stage runs once."""
-    dfs = [ALL_EXTRACTORS[n](parsed) for n in (names or list(ALL_EXTRACTORS))]
-    return functools.reduce(lambda a, b: a.unionByName(b), dfs)
-
-
-# --- revision meta -----------------------------------------------------
-
-from ..ontology import DBO  # noqa: E402  (section-local import, avoids cycle at module top)
-
-META_CONTRIBUTOR = "http://dbpedia.org/meta/contributor"
-META_CONTRIBUTOR_ID = "http://dbpedia.org/meta/contributorID"
-_XSD_DATE_IRI = "http://www.w3.org/2001/XMLSchema#date"
-
-
-def _meta_links():
-    """edit/revision/history index.php links built from the page IRI's
-    encoded title segment (MetaInformationExtractor.scala:36-39)."""
-    base = F.concat(F.lit("http://"), F.col("lang"), F.lit(".wikipedia.org/w/index.php?title="))
-    enc_title = F.regexp_extract(F.col("page_iri"), r"([^/]+)$", 1)
-    edit = F.concat(base, enc_title, F.lit("&action=edit"))
-    revision = F.concat(base, enc_title, F.lit("&oldid="), F.col("revision_id").cast("string"))
-    history = F.concat(base, enc_title, F.lit("&action=history"))
-    return edit, revision, history
-
-
-def _modified_date():
-    """Deterministic modification date: 2000-01-01 + (revision_id % 9000)
-    days. Divergence (documented): the corpus carries no edit timestamps, so
-    the date derives from the revision id; emitted as xsd:date, and the
-    reference's wall-clock wikiPageExtracted quad is NOT emitted — a
-    non-deterministic value would break exact resume and P/R comparison."""
-    return F.date_add(F.to_date(F.lit("2000-01-01")), (F.col("revision_id") % 9000).cast("int")).cast("string")
-
-
-def extract_meta_information(parsed: DataFrame) -> DataFrame:
-    """MetaInformationExtractor (mappings/MetaInformationExtractor.scala:
-    24-53): modification date + edit/revision/history links for Main-ns
-    pages → revision_meta."""
-    pages = _main(parsed).select("lang", "subject", "page_iri", "revision_id")
-    edit, revision, history = _meta_links()
-    a = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageModified", _modified_date(), _XSD_DATE_IRI)
-    b = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageEditLink", edit)
-    c = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageRevisionLink", revision)
-    d = _quads(pages, V.REVISION_META, F.col("subject"), DBO + "wikiPageHistoryLink", history)
-    return a.unionByName(b).unionByName(c).unionByName(d)
-
-
-def extract_contributors(parsed: DataFrame) -> DataFrame:
-    """ContributorExtractor (mappings/ContributorExtractor.scala:28-65).
-    Derivation decision (the corpus carries no contributor columns): the
-    committing entity is the repo — name = repo, id = a deterministic small
-    int from the repo string; subject of the page→contributor quad is the
-    wiki page IRI, mirroring the reference's pageURL choice."""
-    pages = _main(parsed).select("lang", "page_iri", "repo")
-    curl = F.concat(F.lit("http://dbpedia.org/contributor/"),
-                    F.regexp_replace(F.col("repo"), " ", "_"))
-    cid = (F.length("repo") * 1000 + F.ascii(F.substring("repo", 1, 1))).cast("string")
-    a = _quads(pages, V.REVISION_META, F.col("page_iri"), META_CONTRIBUTOR, curl)
-    b = _quads(pages.select("lang", F.col("repo"), curl.alias("c")).distinct(),
-               V.REVISION_META, F.col("c"), RDFS_LABEL, F.col("repo"), XSD_STRING)
-    c = _quads(pages.select("lang", F.col("repo"), curl.alias("c")).distinct(),
-               V.REVISION_META, F.col("c"), META_CONTRIBUTOR_ID, cid, XSD_INTEGER)
-    return a.unionByName(b).unionByName(c)
-
-
-ALL_EXTRACTORS["meta_information"] = extract_meta_information
-ALL_EXTRACTORS["contributors"] = extract_contributors
-
-
-def extract_infobox_references(parsed: DataFrame) -> DataFrame:
-    """InfoboxReferencesExtractor (mappings/InfoboxReferencesExtractor.scala:
-    60-170, simplified): <ref> bodies attributed to the infobox property on
-    whose line they sit → (page, property IRI, plain ref text). Named refs
-    resolve self-closing reuses. Attribution + IRI minting happen at parse
-    time (kgforge/wikitext._extract_refs); this is a pure projection."""
-    ex = _main(parsed).select("lang", "subject", F.explode("ref_texts").alias("r"))
-    # refs whose body renders to '' (pure cite markup) are carried for the
-    # CitedFactsExtractor but emit no reference-text quad
-    keyed = ex.filter(F.col("r.prop_iri").isNotNull() & (F.col("r.text") != ""))
-    return _quads(
-        keyed, V.INFOBOX_REFERENCES, F.col("subject"), F.col("r.prop_iri"),
-        F.col("r.text"), langstring=True,
-    )
-
-
-def extract_images(parsed: DataFrame) -> DataFrame:
-    """ImageExtractor (mappings/ImageExtractorNew.scala:54-94, link-based
-    core): File-namespace links on Main pages → foaf:depiction + commons
-    FilePath URL, per-image type/rights quads, dbo:thumbnail for the FIRST
-    image. Codec-free — media decoding itself stays in kgforge/multimodal.py
-    (stub codecs, real plumbing)."""
-    file_links = F.filter(
-        F.col("links"), lambda l: (l["iw"] == "") & (l["ns"] == FILE)
-    )
-    pages = _main(parsed).filter(F.size(file_links) > 0).select(
-        "lang", "subject",
-        F.explode(file_links).alias("link"),
-        file_links[0]["iri"].alias("first_iri"),
-    )
-    enc = F.regexp_extract(F.col("link.iri"), r"File:(.*)$", 1)
-    url = F.concat(F.lit("http://commons.wikimedia.org/wiki/Special:FilePath/"), enc)
-    thumb = F.concat(url, F.lit("?width=300"))
-    wiki_page = F.concat(
-        F.lit("http://"), F.col("lang"), F.lit(".wikipedia.org/wiki/File:"), enc
-    )
-    is_first = F.col("link.iri") == F.col("first_iri")
-    a = _quads(pages, V.IMAGES, F.col("subject"), V.FOAF_DEPICTION, url)
-    b = _quads(pages.filter(is_first), V.IMAGES, F.col("subject"), V.DBO_THUMBNAIL, thumb)
-    c = _quads(pages, V.IMAGES, url, V.FOAF_THUMBNAIL, thumb)
-    d = _quads(pages, V.IMAGES, url, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    e = _quads(pages, V.IMAGES, thumb, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    f = _quads(pages, V.IMAGES, url, V.DC_RIGHTS, wiki_page)
-    g = _quads(pages, V.IMAGES, thumb, V.DC_RIGHTS, wiki_page)
-    out = a
-    for df in (b, c, d, e, f, g):
-        out = out.unionByName(df)
-    return out
-
-
-def extract_gallery_images(parsed: DataFrame) -> DataFrame:
-    """GalleryExtractor (mappings/GalleryExtractor.scala:24-122): files
-    listed inside ``<gallery>`` bodies on Main pages → the same image quad
-    shapes as the link-based ImageExtractor (minus the first-image
-    dbo:thumbnail, which stays link-based)."""
-    pages = _main(parsed).filter(F.size("galleries") > 0).select(
-        "lang", "subject", F.explode("galleries").alias("g")
-    )
-    url = F.concat(
-        F.lit("http://commons.wikimedia.org/wiki/Special:FilePath/"), F.col("g.enc")
-    )
-    thumb = F.concat(url, F.lit("?width=300"))
-    wiki_page = F.concat(
-        F.lit("http://"), F.col("lang"), F.lit(".wikipedia.org/wiki/File:"), F.col("g.enc")
-    )
-    a = _quads(pages, V.IMAGES, F.col("subject"), V.FOAF_DEPICTION, url)
-    b = _quads(pages, V.IMAGES, url, V.FOAF_THUMBNAIL, thumb)
-    c = _quads(pages, V.IMAGES, url, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    d = _quads(pages, V.IMAGES, thumb, RDF_TYPE, F.lit(V.DBO_IMAGE))
-    e = _quads(pages, V.IMAGES, url, V.DC_RIGHTS, wiki_page)
-    f = _quads(pages, V.IMAGES, thumb, V.DC_RIGHTS, wiki_page)
-    out = a
-    for df in (b, c, d, e, f):
-        out = out.unionByName(df)
-    return out
-
-
-# extension → (mime, ontology class) — FileTypeExtractorConfig.scala:40-67's
-# mimeTypeFromFileExtension, exactly (incl. its quirks: pdf/djvu are
-# StillImage there, mid is application/x-midi, wav is audio/vnd.wave).
-# Documented EXTENSIONS beyond the reference map (which would send them to
-# owl:Thing/octet-stream): ogg/mp3/mp4/webp/bmp/midi — common on commons,
-# typed by their obvious class.
-FILE_TYPE_MAP: dict[str, tuple[str, str]] = {
-    "jpg": ("image/jpeg", V.DBO_STILL_IMAGE),
-    "jpeg": ("image/jpeg", V.DBO_STILL_IMAGE),
-    "png": ("image/png", V.DBO_STILL_IMAGE),
-    "gif": ("image/gif", V.DBO_STILL_IMAGE),
-    "svg": ("image/svg+xml", V.DBO_STILL_IMAGE),
-    "tif": ("image/tiff", V.DBO_STILL_IMAGE),
-    "tiff": ("image/tiff", V.DBO_STILL_IMAGE),
-    "xcf": ("image/xcf", V.DBO_STILL_IMAGE),
-    "kml": ("application/vnd.google-earth.kml+xml", V.DBO_STILL_IMAGE),
-    "pdf": ("application/pdf", V.DBO_STILL_IMAGE),
-    "djvu": ("image/vnd.djvu", V.DBO_STILL_IMAGE),
-    "webp": ("image/webp", V.DBO_STILL_IMAGE),
-    "bmp": ("image/bmp", V.DBO_STILL_IMAGE),
-    "ogg": ("audio/ogg", V.DBO_SOUND),
-    "oga": ("audio/ogg", V.DBO_SOUND),
-    "mp3": ("audio/mpeg", V.DBO_SOUND),
-    "wav": ("audio/vnd.wave", V.DBO_SOUND),
-    "flac": ("audio/x-flac", V.DBO_SOUND),
-    "mid": ("application/x-midi", V.DBO_SOUND),
-    "midi": ("application/x-midi", V.DBO_SOUND),
-    "ogv": ("video/ogg", V.DBO_MOVING_IMAGE),
-    "webm": ("video/webm", V.DBO_MOVING_IMAGE),
-    "mp4": ("video/mp4", V.DBO_MOVING_IMAGE),
-    "js": ("application/javascript", DBO + "Software"),
-}
-
-
-def extract_file_types(parsed: DataFrame) -> DataFrame:
-    """FileTypeExtractor (mappings/FileTypeExtractor.scala:40-226): File-ns
-    pages with a recognizable extension → dbo:fileExtension, dct:format
-    (mime), rdf:type dbo:File + the specific media class, dbo:fileURL to the
-    commons FilePath. Pages without an extension are skipped (the reference
-    logs and skips too)."""
-    ext = F.lower(F.regexp_extract(F.col("title"), r"\.([A-Za-z0-9]+)$", 1))
-    pages = parsed.filter((F.col("namespace") == FILE) & (ext != "")).select(
-        "lang", "subject", "title", ext.alias("ext"),
-        F.regexp_extract(F.col("subject"), r"File:(.*)$", 1).alias("enc"),
-    )
-    mime_pairs: list[Column] = []
-    cls_pairs: list[Column] = []
-    for e, (mime, cls) in FILE_TYPE_MAP.items():
-        mime_pairs += [F.lit(e), F.lit(mime)]
-        cls_pairs += [F.lit(e), F.lit(cls)]
-    mime = F.element_at(F.create_map(*mime_pairs), F.col("ext"))
-    cls = F.element_at(F.create_map(*cls_pairs), F.col("ext"))
-    url = F.concat(F.lit("http://commons.wikimedia.org/wiki/Special:FilePath/"), F.col("enc"))
-    a = _quads(pages, V.FILE_TYPES, F.col("subject"), V.DBO_FILE_EXTENSION,
-               F.col("ext"), datatype=XSD_STRING)
-    b = _quads(pages, V.FILE_TYPES, F.col("subject"), V.DCT_FORMAT, mime,
-               datatype=XSD_STRING)
-    c = _quads(pages, V.FILE_TYPES, F.col("subject"), RDF_TYPE, F.lit(V.DBO_FILE))
-    d = _quads(pages, V.FILE_TYPES, F.col("subject"), RDF_TYPE, cls)
-    e_ = _quads(pages, V.FILE_TYPES, F.col("subject"), V.DBO_FILE_URL, url)
-    out = a
-    for df in (b, c, d, e_):
-        out = out.unionByName(df)
-    return out
-
-
-ALL_EXTRACTORS["infobox_references"] = extract_infobox_references
-ALL_EXTRACTORS["images"] = extract_images
-ALL_EXTRACTORS["gallery_images"] = extract_gallery_images
-ALL_EXTRACTORS["file_types"] = extract_file_types
 
 
 def extract_fr_population(parsed: DataFrame) -> DataFrame:

@@ -5,7 +5,7 @@ mappings/nif/*) over the parse columns — pure Catalyst expressions, no
 Python. The reference computes offsets over MediaWiki-rendered HTML; this
 engine has no rendering API, so offsets are DETERMINISTIC over the engine's
 own ``plain_text`` rendering (documented substitute, same spirit as the
-short-abstract substitute in structural.py):
+short-abstract substitute in extractors/fused.py):
 
 - ``nif_context`` (nif/WikipediaNifExtractor.scala context node): one
   nif:Context per article with beginIndex 0, endIndex = len(plain_text),

@@ -1,18 +1,10 @@
 """GalleryExtractor + FileTypeExtractor (mappings/GalleryExtractor.scala,
 mappings/FileTypeExtractor.scala): gallery harvesting at parse, extension →
-mime/class typing, and fused-path equivalence."""
-
-from pyspark.sql import functions as F
+mime/class typing."""
 
 from kgforge import wikitext
-from kgforge.extractors import fused_quads
-from kgforge.extractors.structural import (
-    extract_file_types,
-    extract_gallery_images,
-    run_extractors,
-)
+from kgforge.extractors import run_extractors
 from kgforge.parse import prepare
-from kgforge.vocab import FILE_TYPES, IMAGES
 
 DBO = "http://dbpedia.org/ontology/"
 
@@ -52,7 +44,7 @@ def _fixture(spark):
 def test_gallery_images_quads(spark):
     parsed = _fixture(spark)
     got = {(r.subject, r.predicate, r.value)
-           for r in extract_gallery_images(parsed).collect()}
+           for r in run_extractors(parsed, ["gallery_images"]).collect()}
     town = "http://dbpedia.org/resource/Town"
     url = "http://commons.wikimedia.org/wiki/Special:FilePath/Town_hall.jpg"
     assert (town, "http://xmlns.com/foaf/0.1/depiction", url) in got
@@ -64,7 +56,7 @@ def test_gallery_images_quads(spark):
 
 def test_file_types_quads(spark):
     parsed = _fixture(spark)
-    ft = extract_file_types(parsed).collect()
+    ft = run_extractors(parsed, ["file_types"]).collect()
     by_subj: dict[str, set] = {}
     for r in ft:
         by_subj.setdefault(r.subject, set()).add((r.predicate, r.value, r.datatype))
@@ -85,19 +77,6 @@ def test_file_types_quads(spark):
     assert ("http://purl.org/dc/terms/format", "application/pdf", xsd_s) in by_subj[pdf]
     # no extension → skipped entirely
     assert not any("Noext" in s for s in by_subj)
-
-
-def test_fused_matches_branch_for_new_extractors(spark):
-    """The fused single-pass plan must emit EXACTLY the same gallery/file
-    quads as the branch extractors (the invariant every extractor pair keeps,
-    tests/test_end_to_end.py model)."""
-    parsed = _fixture(spark).persist()
-    parsed.count()
-    fused = fused_quads(parsed).filter(F.col("dataset").isin(IMAGES, FILE_TYPES))
-    branch = run_extractors(parsed, ["images", "gallery_images", "file_types"])
-    f = {tuple(r) for r in fused.collect()}
-    b = {tuple(r) for r in branch.collect()}
-    assert f == b and len(f) > 0
 
 
 def test_page_props_disambiguations(spark):

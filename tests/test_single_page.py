@@ -86,3 +86,16 @@ def test_infobox_ignore_properties_language_scoped(spark):
     en = extract_page(spark, body, title="Porto", lang="en", include=("fused",))
     en_props = {q["predicate"].rsplit("/", 1)[-1] for q in en.get("infobox_properties", [])}
     assert "imagem" in en_props  # en fallback only ignores image/image_photo/map
+
+
+def test_default_include_lists_each_quad_once(spark):
+    """The fused group already emits file_types and infobox_references, so
+    the default include lists each of their quads once, not twice."""
+    body = PAGE.replace("| population = 12345", "| population = 12345<ref>Census 2020</ref>")
+    out = extract_page(
+        spark, body, title="Testville",
+        extra_pages=[("File:Testville skyline.jpg", "Skyline.\n")],
+    )
+    for ds in ("file_types", "infobox_references"):
+        quads = [tuple(sorted(q.items())) for q in out[ds]]
+        assert quads and len(quads) == len(set(quads)), (ds, quads)
