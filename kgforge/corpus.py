@@ -20,6 +20,7 @@ import random
 import re
 
 from . import vocab as V
+from .dataparsers import _FLAG_TEMPLATES
 from .namespaces import (
     CATEGORY,
     FILE,
@@ -812,8 +813,11 @@ def golden_quads_for(i: int, n: int) -> list[dict]:
         q(_q(lang, V.MAPPINGBASED_LITERALS, subj, DBO + "motto", f.motto, RDF_LANGSTRING))
         q(_q(lang, V.MAPPINGBASED_OBJECTS, subj, DBO + "successor", iri(t[1])))
         q(_q(lang, V.MAPPINGBASED_OBJECTS, subj, DBO + "leader", iri(t[2])))
-        # FlagTemplateParser object path: {{flagicon|GER}} -> Germany
-        q(_q(lang, V.MAPPINGBASED_OBJECTS, subj, DBO + "twinCountry", iri("Germany")))
+        # FlagTemplateParser object path: {{flagicon|GER}} -> Germany, where
+        # the page language names flagicon a flag template (fr has only
+        # drapeau/drapeau2, FlagTemplateParserConfig)
+        if "flagicon" in _FLAG_TEMPLATES.get(lang, _FLAG_TEMPLATES["en"]):
+            q(_q(lang, V.MAPPINGBASED_OBJECTS, subj, DBO + "twinCountry", iri("Germany")))
         q(_q(lang, V.SPECIFIC_MAPPINGBASED, subj, DBO + "Settlement/areaTotal",
              fmt_double(si_area * (1.0 / 1e6)), DBPEDIA_DT + "squareKilometre"))
         # CalculateMapping: areaTotal = area_land + area_water (add)

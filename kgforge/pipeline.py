@@ -15,19 +15,21 @@ from __future__ import annotations
 
 import os
 import time
+from functools import cache, partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extractors import fused_quads, run_extractors
+from .extractors.fused import make_infobox_props_udf
 from .linker import entity_link_quads
 from .mapping_engine import mapping_quads, table_mapping_quads, type_consistency
+from .namespaces import TEMPLATE
 from .parse import prepare
 from .redirects import (
     dispatch_relevant_targets,
     template_redirect_map,
     transitive_redirect_quads,
 )
-from .schema import QUAD_SCHEMA
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -93,6 +95,7 @@ class Pipeline:
             warnings.warn("Iceberg runtime jar not on classpath — falling back to parquet")
             fmt = "parquet"
         self.fmt = fmt
+        self.stages: dict[str, DataFrame] = {}
 
     def _stage(
         self,
@@ -101,48 +104,50 @@ class Pipeline:
         partition_cols: tuple[str, ...] = (),
         materialize: bool = True,
     ) -> DataFrame:
+        """Compute (or resume) one stage and keep it in ``self.stages``."""
         if self.workdir is None:
-            if not materialize:
-                # single-consumer stage: stay lazy so the final action runs
-                # all of them in ONE job (independent subtrees in parallel)
-                return compute()
-            df = compute().persist()
-            # materialize BEFORE fan-out: multiple consumers scanning an
-            # unmaterialized cache race to compute the same partitions
-            df.count()
+            df = compute()
+            if materialize:
+                # materialize BEFORE fan-out, or the consumers race to
+                # compute the same partitions. localCheckpoint, not persist:
+                # the columnar cache of the nested parse rows cost ~3.9 s at
+                # sf1.0 against ~0.4 s, at equal scan times, and a leaf plan
+                # spares each consumer re-analyzing the DAG above it.
+                # coalesce keeps the scans of a multi-branch union at one
+                # task wave. (Resumable runs pass a workdir.) A stage with
+                # one consumer stays lazy: the final action runs them all.
+                df = df.coalesce(self.spark.sparkContext.defaultParallelism).localCheckpoint()
+            self.stages[name] = df
             return df
         if self.fmt == "iceberg":
             table = f"{self.iceberg_namespace}.{self._run_slug}{name}"
-            if not self.spark.catalog.tableExists(table):
-                t0 = time.time()
-                df = compute()
+            done = self.spark.catalog.tableExists(table)
+            read = partial(self.spark.table, table)
+        else:
+            path = os.path.join(self.workdir, name)
+            done = _exists(self.spark, path)
+            read = partial(self.spark.read.parquet, path)
+        if not done:
+            t0 = time.time()
+            df = compute()
+            if self.fmt == "iceberg":
                 w = df.writeTo(table).using("iceberg")
                 if partition_cols:
                     w = w.partitionedBy(*[F.col(c) for c in partition_cols])
                 w.createOrReplace()
-                out = self.spark.table(table)
-                sha_ok = True
-                if "content_sha256" in out.columns:
-                    bad = out.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).count()
-                    sha_ok = bad == 0
-                _lineage(self.spark, self.workdir, name, out.count(),
-                         int((time.time() - t0) * 1000), sha_ok)
-            return self.spark.table(table)
-        path = os.path.join(self.workdir, name)
-        if not _exists(self.spark, path):
-            t0 = time.time()
-            df = compute()
-            w = df.write.mode("overwrite")
-            if partition_cols:
-                w = w.partitionBy(*partition_cols)
-            w.parquet(path)
-            out = self.spark.read.parquet(path)
+            else:
+                w = df.write.mode("overwrite")
+                if partition_cols:
+                    w = w.partitionBy(*partition_cols)
+                w.parquet(path)
+            out = read()
             sha_ok = True
             if "content_sha256" in out.columns:
                 bad = out.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).count()
                 sha_ok = bad == 0
             _lineage(self.spark, self.workdir, name, out.count(), int((time.time() - t0) * 1000), sha_ok)
-        return self.spark.read.parquet(path)
+        self.stages[name] = read()
+        return self.stages[name]
 
     def run(
         self,
@@ -162,26 +167,50 @@ class Pipeline:
         column carries Wikidata entity JSON (items/properties/lexemes) —
         routed through the full wikidata extractor group as its own
         checkpointed stage, the reference's separate wikidata-dump run
-        folded into one resumable job."""
-        parsed = self._stage("parsed", lambda: prepare(corpus))
+        folded into one resumable job.
+
+        This is the one assembly of the engine DAG: the shipped job and the
+        driver's build cache (``__spark_entry__._engine_quads``) both run it.
+        The staged frames stay in ``self.stages`` (``parsed``, ``quads``, …)
+        for callers that derive more datasets from the same parse."""
         if extractors is None:
             # template-redirect map (Redirects.load analog): tiny driver-side
             # dict shipped inside the UDF closures, so infobox/mapping
-            # dispatch sees through Template-ns redirects (resolveMap)
-            tred = template_redirect_map(
-                parsed, relevant_targets=dispatch_relevant_targets()
-            )
+            # dispatch sees through Template-ns redirects (resolveMap). Only
+            # TEMPLATE-namespace pages feed it, and prepare()'s namespace
+            # gate runs BEFORE the Python parse — so a Template-only
+            # mini-parse resolves it ahead of the full parse stage, which
+            # carries the infobox pass that needs it. Resolved only when a
+            # stage that needs it is computed: a resumed run skips it.
+            @cache
+            def tred() -> dict[str, str]:
+                return template_redirect_map(
+                    prepare(corpus, namespaces=(TEMPLATE,)),
+                    relevant_targets=dispatch_relevant_targets(),
+                )
+
+            def parse() -> DataFrame:
+                # the infobox Arrow pass is the most expensive per-page step
+                # and several consumers read its output (fused, cited facts,
+                # the driver's hybrid and raw infobox queries): it runs ONCE,
+                # into a shared ``_ib`` column that every consumer detects
+                # and reuses (extractors/fused.py)
+                ib = make_infobox_props_udf(tred())(F.col("lang"), F.col("templates"))
+                return prepare(corpus).withColumn("_ib", ib)
+
+            parsed = self._stage("parsed", parse)
             # fused single-pass generator (identical quad set; 1 scan not 21)
             # + the mapping engine (instance types, mapping-based statements)
             quads = self._stage(
                 "quads",
-                lambda: fused_quads(parsed, tred)
-                .unionByName(mapping_quads(parsed, template_redirects=tred,
+                lambda: fused_quads(parsed, tred())
+                .unionByName(mapping_quads(parsed, template_redirects=tred(),
                                            mappings=mappings, ontology=ontology))
                 .unionByName(table_mapping_quads(parsed)),
                 ("dataset",),
             )
         else:
+            parsed = self._stage("parsed", lambda: prepare(corpus))
             quads = self._stage("quads", lambda: run_extractors(parsed, extractors), ("dataset",))
         transitive = self._stage(
             "transitive_redirects", lambda: transitive_redirect_quads(quads), materialize=False

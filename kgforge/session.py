@@ -8,8 +8,32 @@ assumes. On a real cluster the same builder is used via spark-submit
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# the local driver heap: half the host's RAM (the Python workers, the
+# page cache and a tmpfs shuffle dir share the rest), 1g to 16g
+MAX_DRIVER_MB = 16 * 1024
+# shuffles go to RAM-backed /dev/shm only while it has this much room free
+# (containers often mount a 64 MB one)
+MIN_SHM_FREE_BYTES = 2 << 30
+
+
+def default_driver_memory(mem_total_bytes: int) -> str:
+    """Spark ``driver.memory`` for a host with ``mem_total_bytes`` of RAM."""
+    return f"{max(1024, min(MAX_DRIVER_MB, mem_total_bytes >> 21))}m"
+
+
+def default_local_dir(shm: str = "/dev/shm") -> str:
+    """``spark.local.dir``: tmpfs when it has room, else the temp dir."""
+    try:
+        if shutil.disk_usage(shm).free >= MIN_SHM_FREE_BYTES:
+            return os.path.join(shm, "spark-local")
+    except OSError:
+        pass
+    return os.path.join(tempfile.gettempdir(), "spark-local")
 
 
 def build_session(
@@ -46,11 +70,12 @@ def build_session(
         # is losing user-code line numbers in error messages — acceptable
         # for a production engine; flip it back on when debugging.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")))
         # local-mode shuffles go through spark.local.dir; tmpfs keeps the
         # shuffle-heavy stages (dedup, consistency join) CPU-bound instead of
         # disk-bound (a real cluster shuffles over NVMe/network per executor)
-        .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
+        .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR") or default_local_dir())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

@@ -1409,10 +1409,12 @@ def wikidata_site_links_quads(links: DataFrame, languages: list[str]) -> DataFra
     firsts = F.transform(
         F.filter(
             idx,
+            # F.get is 0-based and null out of range, so at i = 1 it reads
+            # nothing (element_at(sts, 0) raises under ANSI mode)
             lambda i: (i == 1)
             | (
                 F.element_at(F.col("sts"), i)["site"]
-                != F.element_at(F.col("sts"), i - 1)["site"]
+                != F.get(F.col("sts"), i - 2)["site"]
             ),
         ),
         lambda i: F.struct(

@@ -57,3 +57,20 @@ def test_content_sha_invariant(spark):
     bad = parsed.filter(F.sha2(F.col("content"), 256) != F.col("content_sha256")).count()
     assert bad == 0
 
+
+
+def test_golden_twin_country_follows_flag_templates():
+    """{{flagicon|GER}} names a country only in languages that have a
+    flagicon template (FlagTemplateParserConfig): fr has only
+    drapeau/drapeau2, so French settlements get no dbo:twinCountry. The
+    first French settlements lie past 200 pages."""
+    import collections
+
+    from kgforge import vocab as V
+
+    quads = C.golden_quads(1000)
+    twin = collections.Counter(q["language"] for q in quads if q["predicate"] == C.DBO + "twinCountry")
+    settled = {q["language"] for q in quads if q["dataset"] == V.INSTANCE_TYPES
+               and q["value"] in (C.DBO + "Settlement", C.DBO + "City")}
+    assert "fr" in settled
+    assert twin["fr"] == 0 and twin["en"] > 0 and twin["de"] > 0

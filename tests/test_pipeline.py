@@ -11,7 +11,7 @@ from kgforge.emit import read_ntriples, write_ntriples
 from kgforge.pipeline import run_pipeline
 
 
-def test_resume_and_lineage(spark):
+def test_resume_and_lineage(spark, monkeypatch):
     wd = tempfile.mkdtemp(prefix="kgforge_pipe_")
     corpus = C.generate_corpus_df(spark, 100, partitions=2)
     g1 = run_pipeline(spark, corpus, workdir=wd)
@@ -20,7 +20,10 @@ def test_resume_and_lineage(spark):
     stages = {r.stage for r in lineage.collect()}
     assert {"parsed", "quads", "transitive_redirects", "type_consistency", "entity_links", "graph"} <= stages
     assert lineage.filter(~F.col("content_sha_ok")).count() == 0
-    # resume: same workdir → all stages skipped, identical output
+    # resume: same workdir → all stages skipped, identical output; the
+    # staged parse is reused, so nothing is parsed again (not even the
+    # Template-only parse behind the template-redirect map)
+    monkeypatch.setattr("kgforge.pipeline.prepare", None)
     g2 = run_pipeline(spark, corpus, workdir=wd)
     assert g2.count() == n1
     # partial resume: drop the final stage, rerun → recomputed identically
@@ -118,3 +121,65 @@ def test_pipeline_with_wikidata_corpus(spark):
     # resume: identical output, wikidata stage skipped
     g2 = run_pipeline(spark, corpus, workdir=wd, wikidata_corpus=wd_corpus)
     assert g2.count() == n1
+
+
+def _python_udfs(df) -> list[list[str]]:
+    """UDF names of each ArrowEvalPython node in ``df``'s executed plan."""
+    out = []
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if node.nodeName() == "ArrowEvalPython":
+            udfs = node.udfs()
+            out.append(sorted(udfs.apply(i).name() for i in range(udfs.size())))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_shipped_build_runs_each_python_udf_once(spark):
+    """The infobox pass runs once, in the parse stage, and the quads stage
+    reads its column; the mapping and table UDFs run once each."""
+    from kgforge.pipeline import Pipeline
+
+    class PlanRecorder(Pipeline):
+        plans = {}
+
+        def _stage(self, name, compute, *args, **kwargs):
+            def recorded():
+                df = compute()
+                self.plans[name] = _python_udfs(df)
+                return df
+
+            return super()._stage(name, recorded, *args, **kwargs)
+
+    p = PlanRecorder(spark)
+    p.run(C.generate_corpus_df(spark, 200, partitions=4))
+    assert p.plans["parsed"] == [["infobox_props_udf"]]
+    assert sorted(p.plans["quads"]) == [["mapping_udf"], ["table_udf"]]
+
+
+def test_driver_build_is_the_shipped_graph(spark):
+    """The driver's build cache is ``Pipeline.run`` plus three datasets
+    only the driver serves."""
+    import collections
+
+    import __spark_entry__ as E
+    from kgforge.driver_corpus import corpus_from_documents
+
+    sf_dir = "/root/testdata/sf0.001"
+    cols = ["dataset", "subject", "predicate", "value", "datatype", "language", "context"]
+
+    def rows(df):
+        return collections.Counter(tuple(r) for r in df.select(*cols).collect())
+
+    driver_only = ("nif_context", "nif_page_structure", "nif_text_links",
+                   "long_abstracts", "cited_facts")
+    engine = E._engine_quads(spark, sf_dir)
+    shipped = run_pipeline(spark, corpus_from_documents(spark, sf_dir))
+    assert rows(engine.filter(~F.col("dataset").isin(*driver_only))) == rows(shipped)
+    assert engine.filter(F.col("dataset").isin(*driver_only)).count() > 0

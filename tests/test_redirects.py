@@ -61,7 +61,7 @@ def test_distributed_closure_matches_driver_path(spark):
         assert dist == driver, pairs
 
 
-def _tmpl_parsed(spark):
+def _tmpl_parsed(spark, **prepare_args):
     from kgforge.parse import prepare
 
     rows = [
@@ -77,7 +77,7 @@ def _tmpl_parsed(spark):
     ]
     return prepare(spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
-    ))
+    ), **prepare_args)
 
 
 def test_template_redirect_map_fallback_matches_driver(spark):
@@ -92,6 +92,16 @@ def test_template_redirect_map_fallback_matches_driver(spark):
     assert driver == dist == {"a": "final target", "b": "final target", "c": "final target"}
     rules = {"final target": object()}
     assert resolve_mapping_names(rules, driver).keys() == resolve_mapping_names(rules, dist).keys()
+
+
+def test_template_redirect_map_from_template_only_parse(spark):
+    """Pipeline.run resolves the map from a Template-only parse ahead of the
+    full parse stage: Template-ns redirect pages are all the map reads."""
+    from kgforge.namespaces import TEMPLATE
+    from kgforge.redirects import template_redirect_map
+
+    full = template_redirect_map(_tmpl_parsed(spark))
+    assert full and template_redirect_map(_tmpl_parsed(spark, namespaces=(TEMPLATE,))) == full
 
 
 def test_template_redirect_map_relevant_targets_filter(spark):

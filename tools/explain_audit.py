@@ -34,7 +34,7 @@ def main():
     from kgforge.mapping_engine import type_consistency
     from kgforge.parse import prepare
 
-    spark = build_session(app="plan-audit", master="local[8]", shuffle_partitions=8)
+    spark = build_session(app="plan-audit", shuffle_partitions=8)
     wd = tempfile.mkdtemp(prefix="kgforge_audit_")
     C.generate_corpus_df(spark, 500, partitions=4).write.parquet(wd + "/corpus")
     corpus = spark.read.parquet(wd + "/corpus")
